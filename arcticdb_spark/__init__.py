@@ -13,9 +13,20 @@ Layout:
     session.py       shared SparkSession factory tuned for OLAP
     expr.py          ExpressionNode AST -> pyspark Column (ref. type semantics)
     query.py         QueryBuilder: clause list -> DataFrame transformations
-    catalog.py       Library / symbol manifests (versions, snapshots)
-    writer.py        write / append / update / delete / stage / finalize
-    reader.py        versioned reads with pruning (date_range, row_range, columns)
+    catalog.py       Arctic / Library: symbol manifests (versions,
+                     snapshots), write / append / update / delete /
+                     stage / finalize, and versioned reads with pruning
+                     (date_range, row_range, columns)
+    arrowwrite.py    driver-side pyarrow write path for pandas-backed writes
+    lazy.py          LazyDataFrame / LazyDataFrameCollection / concat
+    normalizers.py   user-registered custom normalizers
+    timeframe.py     TimeFrame, the numpy timeseries input kind
+    toolbox.py       key-level library introspection and admin surface
+    tools.py         runtime configuration registry (env vars)
+    exceptions.py    reference exception names and error codes
+    functions/       reference-style scalar function surface (col, where)
+    plans/           row ids, compaction planning, skew salting, stats pruning
+    sources/         table loaders and the metadata filesystem abstraction
     operators/       resample, concat, merge_update (clause kernels)
     extensions/      beyond-reference: joins, dedup, similarity, text, multimodal
     streaming/       structured-streaming ingestion (stage -> finalize)

@@ -1203,6 +1203,18 @@ def _uint64_output_cols(df: DataFrame) -> list[str]:
             and (f.metadata or {}).get(UINT64_META)]
 
 
+def _write_order(row_ids):
+    """Stable permutation that puts collected rows back in write order
+    (ascending physical row id), or None when they already are — the
+    single-partition case. Spark returns multi-file scans in partition
+    order, and ``FilePartition`` packs files largest-first."""
+    import numpy as np
+    ids = np.asarray(row_ids, dtype=np.int64)
+    if (ids[1:] >= ids[:-1]).all():
+        return None
+    return np.argsort(ids, kind="stable")
+
+
 def _is_long_type(df: DataFrame, colname: str) -> bool:
     from pyspark.sql import types as T
     try:
@@ -4220,8 +4232,11 @@ class Library:
 
         # pandas/arrow/polars outputs restore the reference's row order
         # (rows come back in WRITE order — the physical row id): a parquet
-        # scan's row order is file-listing order, which scrambles
-        # multi-file positional frames. Spark-format output stays unordered
+        # scan returns rows in partition order, which scrambles multi-file
+        # positional frames. The row id rides through the collect and
+        # _format_output sorts the collected rows on the driver — a global
+        # orderBy would cost a sampling and a shuffle job for a result that
+        # is collected anyway. Spark-format output stays unordered
         # (distributed consumers order explicitly when they care).
         order_out = (output_format in ("pandas", "arrow", "polars")
                      and query_builder is None)
@@ -4405,14 +4420,14 @@ class Library:
                 if helper in df.columns:
                     keep.append(helper)
             df = df.select(keep)
-        if ROW_ID in df.columns:
-            if order_out or range_positions:
-                df = df.orderBy(ROW_ID)
-            if not with_row_ids:
-                df = df.drop(ROW_ID)
+        order_by = (ROW_ID if ROW_ID in df.columns
+                    and (order_out or range_positions) else None)
+        if ROW_ID in df.columns and order_by is None and not with_row_ids:
+            df = df.drop(ROW_ID)
         return self._format_output(
             df, output_format, m.norm_meta,
             range_positions=range_positions,
+            order_by=order_by, keep_order_col=with_row_ids,
             group_index_cols=self._groupby_index_cols(query_builder),
             sorted_flag=(m.sorted if query_builder is None else None))
 
@@ -4512,7 +4527,12 @@ class Library:
                        undecided_index: bool = False,
                        group_index_cols: list | None = None,
                        range_positions: bool = False,
-                       sorted_flag: str | None = None):
+                       sorted_flag: str | None = None,
+                       order_by: str | None = None,
+                       keep_order_col: bool = False):
+        """``order_by``: int64 column the collected pandas/arrow/polars rows
+        are sorted on (stably, on the driver), then dropped unless
+        ``keep_order_col``."""
         if norm_meta and norm_meta.get("index_type") == "ndarray":
             # reference NdArrayNormalizer.denormalize: reshape the flat
             # column back to the stored shape — for every output format
@@ -4542,6 +4562,12 @@ class Library:
             import pandas as pd
             u64_cols = _uint64_output_cols(df)
             pdf = df.toPandas()   # Arrow-accelerated collection
+            if order_by is not None:
+                perm = _write_order(pdf[order_by].to_numpy())
+                if perm is not None:
+                    pdf = pdf.take(perm).reset_index(drop=True)
+                if not keep_order_col:
+                    del pdf[order_by]
             # uint64 restore: the stored LONG is the exact bit pattern —
             # view back (zero-copy). A null (possible only via dynamic-
             # schema backfill) degrades the column to float64 first, so
@@ -4598,8 +4624,8 @@ class Library:
                     # the user's index name verbatim
                     pdf.index.name = norm_meta["orig_name"]
             # rebuild a non-default RangeIndex from recorded start/step —
-            # rows arrive in write order (ROW_ID restore), so position i is
-            # original row i
+            # the rows were put back in write order right after the collect
+            # (order_by above), so position i is original row i
             elif (range_positions and ORIG_POS in pdf.columns
                     and (norm_meta or {}).get("index_type") in (None,
                                                                 "range")):
@@ -4673,15 +4699,16 @@ class Library:
                 pdf.index = pd.DatetimeIndex([])
             return pdf
         if output_format == "arrow":
-            return Library._arrow_with_ns(df, shadows, norm_meta)
+            return Library._arrow_with_ns(df, shadows, norm_meta,
+                                          order_by, keep_order_col)
         if output_format == "polars":
             try:
                 import polars as pl
             except ImportError as e:
                 raise ArcticException(
                     "output_format='polars' requires the polars package") from e
-            out = pl.from_arrow(Library._arrow_with_ns(df, shadows,
-                                                       norm_meta))
+            out = pl.from_arrow(Library._arrow_with_ns(
+                df, shadows, norm_meta, order_by, keep_order_col))
             # reference test_polars_set_sorted.py: a sorted timeseries
             # symbol's INDEX column carries the polars SORTED_ASC/DESC
             # flag (from the manifest's SortedValue); value columns and
@@ -4697,8 +4724,11 @@ class Library:
         raise ArcticException(f"unknown output_format {output_format!r}")
 
     @staticmethod
-    def _arrow_with_ns(df: DataFrame, shadows: list[str], norm_meta=None):
-        """Collect to Arrow, rebuilding exact timestamp[ns] index columns
+    def _arrow_with_ns(df: DataFrame, shadows: list[str], norm_meta=None,
+                       order_by: str | None = None,
+                       keep_order_col: bool = False):
+        """Collect to Arrow, restoring write order from ``order_by`` (see
+        ``_format_output``), rebuilding exact timestamp[ns] index columns
         from their LONG shadows (the reference's Arrow output is ns) and
         bit-viewing uint64 columns back to uint64 (Arrow has the type).
         Then applies the reference's Arrow output contract
@@ -4710,6 +4740,13 @@ class Library:
         import pyarrow.compute as pc
         u64_cols = _uint64_output_cols(df)
         tbl = df.toArrow()
+        if order_by is not None:
+            i = tbl.column_names.index(order_by)
+            perm = _write_order(tbl.column(i).to_numpy())
+            if perm is not None:
+                tbl = tbl.take(perm)
+            if not keep_order_col:
+                tbl = tbl.remove_column(i)
         for c in u64_cols:
             i = tbl.column_names.index(c)
             arr = pa.chunked_array([ch.view(pa.uint64())

@@ -761,7 +761,10 @@ def _collect_matrix(base: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     tbl = base.select("id", "vec").toArrow()
     ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
     vec = tbl.column("vec").combine_chunks()
-    flat = np.asarray(vec.flatten(), dtype=np.float64)
+    # astype always copies: one writable float64 buffer for the in-place
+    # normalization below, whether the column is array<float> (a widening
+    # copy) or array<double> (whose to_numpy is a read-only Arrow view)
+    flat = vec.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     n = len(ids)
     if n == 0:
         return ids, flat.reshape(0, 0)
@@ -1240,6 +1243,7 @@ def _simhash_hash_pairs(groups: DataFrame, bands: int,
         m = chunk(sha, b - 1) == chunk(shb, b - 1)
         earlier = m if earlier is None else (earlier | m)
         keep = keep.when(F.col("bi") == b, ~earlier)
+    keep = keep.otherwise(F.lit(False))
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (grouped.select("bi", F.explode(pair_structs).alias("p"))
             .filter(keep)
@@ -1432,10 +1436,11 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
     h = simhash(F.col(text_col))
     base = _spread(df.select(F.col(id_col).alias("id"), text_col)) \
         .select("id", h.alias("sh"))
-    # lazy persist (r14): the first consumer is the cluster gate's single
-    # Arrow collect (near_dup_clusters), which fills the cache; the member/
-    # rep joins in the returned plan then read it — the eager count here
-    # was a whole extra pass over the signature computation
+    # lazy persist (r14): no eager count — that was a whole extra pass
+    # over the signature computation. The first consumer is the cluster
+    # gate's Arrow collect (near_dup_clusters); its limit(...) can stop
+    # early and leave the cache only partly filled, so the member/rep
+    # joins in the returned plan may still compute missing partitions
     groups = _persist(base.groupBy("sh").agg(F.min("id").alias("min_id"),
                                              F.collect_list("id").alias("ids")))
     hpairs = _simhash_hash_pairs(groups, bands, max_hamming)

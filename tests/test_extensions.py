@@ -689,6 +689,32 @@ def test_embedding_byte_gate_routes_to_join(spark, monkeypatch):
     assert (0, 1) in got
 
 
+def test_embedding_pairs_double_matches_float(spark):
+    """array<double> embeddings give the same pairs as array<float> on
+    both paths that normalize the collected matrix in place: the exact
+    blocked GEMM and the LSH broadcast rescore. The values are float32-
+    exact, so both element types carry identical vectors."""
+    import numpy as np
+    rng = np.random.default_rng(5)
+    vecs = rng.normal(size=(40, 16)).astype(np.float32)
+    for a, b in ((0, 1), (7, 20), (33, 34)):
+        vecs[b] = vecs[a] + np.float32(0.001)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+
+    def pairs(elem, **kw):
+        df = spark.createDataFrame(
+            rows, f"vec_id long, embedding array<{elem}>")
+        out = xdedup.embedding_near_dup_pairs(df, threshold=0.99, dim=16,
+                                              n_rows=40, **kw).toPandas()
+        return {(a, b) for a, b in zip(out.id_a, out.id_b)}
+
+    for kw in ({"strategy": "exact"},
+               {"strategy": "lsh", "n_planes": 4, "n_tables": 8}):
+        got = pairs("double", **kw)
+        assert got == pairs("float", **kw)
+        assert {(0, 1), (7, 20), (33, 34)} <= got
+
+
 def test_jaccard_byte_gate_boundary_routing(spark, monkeypatch):
     """The broadcast gate compares the MEASURED lookup size (8 B per
     shingle hash + per-entry ndarray/dict overhead) against the budget: a

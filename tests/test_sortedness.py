@@ -292,3 +292,96 @@ def test_write_unsorted_default_raises(tmp_lib):
     with pytest.raises(SortingException):
         tmp_lib.write("bad", _desc_df("2019-01-01"))
     assert not tmp_lib.has_symbol("bad")
+
+
+# --- write order is restored on the driver, not by a Spark global sort ----
+
+# append sizes that differ enough for Spark's FilePartition packing (files
+# sorted largest-first, one small file per partition) to collect the files
+# out of write order
+_CHUNK_ROWS = [5, 4000, 40, 2500, 300, 1200, 10, 800, 60, 3000]
+
+
+def _multi_size_symbol(lib, sym="mf"):
+    """A 10-file RangeIndex symbol (start 100, step 2) built by appends of
+    very different sizes; returns the frame it models."""
+    chunks, start = [], 0
+    for i, n in enumerate(_CHUNK_ROWS):
+        chunk = pd.DataFrame(
+            {"v": np.arange(start, start + n, dtype=np.int64),
+             "s": [f"r{j}" for j in range(start, start + n)]},
+            index=pd.RangeIndex(100 + 2 * start, 100 + 2 * (start + n), 2))
+        (lib.write if i == 0 else lib.append)(sym, chunk)
+        chunks.append(chunk)
+        start += n
+    assert len(lib._resolve_version(sym, None).files) == len(_CHUNK_ROWS)
+    full = pd.concat(chunks)
+    # precondition: the unordered Spark scan really is out of write order
+    scanned = lib.read(sym, output_format="spark").toPandas()["v"].tolist()
+    assert scanned != full["v"].tolist()
+    return full
+
+
+def test_multi_size_read_restores_write_order(tmp_lib):
+    full = _multi_size_symbol(tmp_lib)
+    out = tmp_lib.read("mf", output_format="pandas")
+    pd.testing.assert_frame_equal(out, full)
+
+    tbl = tmp_lib.read("mf", output_format="arrow")
+    assert "__row_id__" not in tbl.column_names
+    assert tbl.column("v").to_pylist() == full["v"].tolist()
+    assert tbl.column("s").to_pylist() == full["s"].tolist()
+
+
+def test_multi_size_read_polars_write_order(tmp_lib):
+    pytest.importorskip("polars")
+    full = _multi_size_symbol(tmp_lib)
+    out = tmp_lib.read("mf", output_format="polars")
+    assert out["v"].to_list() == full["v"].tolist()
+
+
+def test_multi_size_read_with_row_ids_keeps_ids_in_order(tmp_lib):
+    full = _multi_size_symbol(tmp_lib)
+    n = len(full)
+    out = tmp_lib.read("mf", output_format="pandas", with_row_ids=True)
+    assert out["v"].tolist() == full["v"].tolist()
+    assert out["__row_id__"].tolist() == list(range(n))
+    tbl = tmp_lib.read("mf", output_format="arrow", with_row_ids=True)
+    assert tbl.column("__row_id__").to_pylist() == list(range(n))
+    assert tbl.column("v").to_pylist() == full["v"].tolist()
+
+
+def test_multi_size_row_range_write_order(tmp_lib):
+    from arcticdb_spark import QueryBuilder
+    full = _multi_size_symbol(tmp_lib)
+    lo, hi = 3, 9000
+    # plain pandas row_range: the RangeIndex positions are rebuilt from the
+    # original row ids (range_positions path)
+    out = tmp_lib.read("mf", output_format="pandas", row_range=(lo, hi))
+    pd.testing.assert_frame_equal(out, full.iloc[lo:hi])
+    tbl = tmp_lib.read("mf", output_format="arrow", row_range=(lo, hi))
+    assert tbl.column("v").to_pylist() == full["v"].tolist()[lo:hi]
+    # the same positions through a QueryBuilder row_range / tail clause
+    q = QueryBuilder().row_range((lo, hi))
+    out = tmp_lib.read("mf", output_format="pandas", query_builder=q)
+    pd.testing.assert_frame_equal(out, full.iloc[lo:hi])
+    out = tmp_lib.read("mf", output_format="pandas",
+                       query_builder=QueryBuilder().tail(7000))
+    pd.testing.assert_frame_equal(out, full.iloc[-7000:])
+
+
+def test_plain_pandas_read_is_one_spark_job(tmp_lib):
+    """Write order costs no Spark work: a global orderBy would add a
+    sampling and a shuffle job to what is one scan-and-collect job."""
+    full = _multi_size_symbol(tmp_lib)
+    sc = tmp_lib.spark.sparkContext
+    group = "test_plain_pandas_read_is_one_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        out = tmp_lib.read("mf", output_format="pandas")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # job events are async
+    assert out["v"].tolist() == full["v"].tolist()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
