@@ -1,25 +1,33 @@
 """Deduplication operators for training-data pipelines.
 
 Every stage is built from JVM-side column expressions (md5 / array ops /
-joins) — no Python in the hot path — and every shuffle is on a key designed
-to stay small:
+joins), with Python only in vectorized Arrow-batch UDFs, and every shuffle
+is on a key designed to stay small:
 
 * **exact_dedup** — hash-groupBy on a normalized fingerprint. One shuffle on
   a 32-char key; at 100 TB combine map-side, or pre-bucket by fingerprint.
+* **banded candidates** — MinHash, SimHash and embedding LSH all reduce the
+  O(n²) similarity search to "pairs that share a band key", and all three
+  generate those pairs with ONE kernel, ``_band_pairs``: explode each
+  member's band keys, group per (band index, key) — one shuffle, with a
+  hot band's members on one reducer — emit ordered pairs from the sorted
+  member array, and keep each pair only in the FIRST band both members
+  share, so the pair stream needs no ``distinct()``. Verification
+  (Jaccard, Hamming, cosine) is a separate step on the candidate pairs.
 * **MinHash + LSH** — shingle -> per-seed min of md5(seed||shingle) ->
-  band keys -> self-join on band key. The expensive O(n²) similarity join is
-  reduced to equi-joins on short band-hash keys (standard LSH banding), which
-  Spark executes as ordinary shuffle joins with AQE skew handling.
-  md5 is used as the hash family (seeded by prefixing) because it is
-  available and bit-identical in Spark, DuckDB and Python — so the whole
-  pipeline is oracle-checkable; lexicographic min over hex strings is a
-  valid uniform min-hash.
-* **SimHash** — 64-bit (here 32-bit for portable integer math) weighted
-  bit-vote over token hashes; near-dups = same value in any rotated band.
-* **n-gram Jaccard** — exact verify step on LSH candidates (array_intersect /
-  array_union on token-set arrays).
-* **embedding near-dup** — cosine over the embedding column; see
-  similarity.py for the ANN path.
+  band keys. md5 is used as the hash family (seeded by prefixing) because
+  it is available and bit-identical in Spark, DuckDB and Python — so the
+  whole pipeline is oracle-checkable; lexicographic min over hex strings is
+  a valid uniform min-hash.
+* **SimHash** — 60-bit weighted bit-vote over token md5s (60, not 64, keeps
+  the value in signed-long range); the band keys are the hash's fixed-width
+  chunks, so any pair within ``bands-1`` differing bits is a candidate
+  (pigeonhole), verified by popcount.
+* **n-gram Jaccard** — exact verify step on MinHash candidates (int64
+  shingle-hash sets, broadcast or re-joined by a byte gate).
+* **embedding near-dup** — cosine over the embedding column: exact blocked
+  GEMM by default, opt-in hyperplane LSH whose per-table bucket strings are
+  the band keys; see similarity.py for the ANN path.
 """
 
 from __future__ import annotations
@@ -339,44 +347,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.when(n >= k, sh).otherwise(F.array(full))
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """k-token shingles as strings; prefer projecting the token array to a
-    column and calling :func:`shingles_from_tokens` in hot paths."""
-    return shingles_from_tokens(tokens(F.lower(text)), k)
-
-
-def minhash_signature(text: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """Array of ``num_hashes`` min-hashes.
-
-    Hash family: one seeded md5 per shingle yields FOUR independent 32-bit
-    hashes (8-hex-char substrings of the 128-bit digest) — 4x fewer digest
-    computations than one md5 per signature position; Catalyst subexpression
-    elimination shares the md5 across the 4 chunk extractions. Min over hex
-    strings is a valid uniform min-hash; identical SQL exists in DuckDB, so
-    the whole construction stays oracle-checkable."""
-    sh = shingles(text, k)
-    def chunk_hash(seed: int, chunk: int):
-        # single-arg lambda required (Spark maps lambda arity to HOF args)
-        return lambda s: F.substring(
-            F.md5(F.concat(F.lit(f"h{seed}:"), s)), chunk * 8 + 1, 8)
-
-    sigs = []
-    for i in range(num_hashes):
-        seed, chunk = divmod(i, 4)
-        sigs.append(F.array_min(F.transform(sh, chunk_hash(seed, chunk))))
-    return F.array(*sigs)
-
-
-def band_keys(sig: Column, bands: int, rows: int) -> Column:
-    """LSH banding: split the signature into ``bands`` groups of ``rows``
-    hashes; each band key = band index + md5 of the concatenated group."""
-    keys = []
-    for b in range(bands):
-        seg = F.slice(sig, b * rows + 1, rows)
-        keys.append(F.concat(F.lit(f"b{b}:"), F.md5(F.array_join(seg, "|"))))
-    return F.array(*keys)
-
-
 def _scan_partitions_estimate(df: DataFrame) -> int | None:
     """Exact scan-partition count for the few-local-files case, from file
     sizes + Spark's split-packing math (FilePartition.getFilePartitions):
@@ -450,13 +420,77 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def minhash_band_table(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 16,
-                       bands: int = 4, k: int = 3) -> DataFrame:
-    """(id, band_key) rows. Lazy since r14: the only consumer
-    (minhash_near_dup_pairs) groups rather than self-joins, so the
-    expensive signature expression (num_hashes × md5 per shingle) is
-    evaluated exactly once per row with no persist/materialize job."""
+def _ordered_pairs(arr: Column, pair) -> Column:
+    """``pair(x, y)`` for every element ``x`` of ``arr`` and every LATER
+    element ``y``, flattened — over a sorted array, each unordered pair
+    exactly once with ``x <= y``."""
+    return F.flatten(F.transform(
+        arr,
+        lambda x, i: F.transform(F.slice(arr, i + F.lit(2), F.size(arr)),
+                                 lambda y: pair(x, y))))
+
+
+def _band_pairs(df: DataFrame, member: str, keys: list[Column]
+                ) -> DataFrame:
+    """(id_a, id_b) candidate pairs, ``id_a < id_b``, of ``member`` values
+    that share at least one band key; ``keys[b]`` is band ``b``'s key over
+    ``df``. The candidate step of every banded producer: MinHash band
+    keys, SimHash chunks and hyperplane-LSH bucket strings.
+
+    Plan shape: one narrow map, ONE shuffle that groups each (band index,
+    key) — a hot band's members land on one reducer, exactly like a band
+    self-join's hash partitioning, but the keyed table crosses the network
+    once — then ordered pairs from the sorted member array. No cartesian
+    anywhere, and no ``distinct()`` over the pair stream (the stream that
+    goes quadratic on hot bands): every member carries its EARLIER band
+    keys (``ek``, ~(bands-1)/2 keys per keyed row), and a pair is kept only
+    in the FIRST band both members share — an agreeing earlier key means
+    the pair already surfaced in that band's group."""
+    cols = [f"__k{b}__" for b in range(len(keys))]
+    # each key becomes a PHYSICAL column first, and the generator explodes
+    # a CONSTANT-size array of (bi, band, ek) structs over those
+    # attributes. Two traps this shape avoids (measured, 70x): a
+    # posexplode over a computed array ATTRIBUTE makes
+    # InferFiltersFromGenerate add ``size(arr) > 0``, which filter
+    # pushdown inlines through every projection down to the scan —
+    # re-evaluating the whole key pipeline per input row (a literal-size
+    # array folds the inferred filter away instead); and referencing the
+    # key array after the Generate would duplicate its expression. The
+    # key columns stay a separate Project (CollapseProject never inlines
+    # non-cheap multiply-referenced exprs), so every key runs once.
+    kd = df.select(member, *[k.alias(c) for k, c in zip(keys, cols)])
+    items = F.array(*[
+        F.struct(F.lit(b).alias("bi"), F.col(c).alias("band"),
+                 F.array(*[F.col(e) for e in cols[:b]]).alias("ek"))
+        for b, c in enumerate(cols)])
+    grouped = (kd.select(member, F.explode(items).alias("x"))
+               .groupBy(F.col("x.bi").alias("bi"), F.col("x.band").alias("band"))
+               .agg(F.array_sort(F.collect_list(F.struct(
+                   F.col(member), F.col("x.ek").alias("ek")))).alias("ms"))
+               .where(F.size("ms") >= 2))
+    pairs = _ordered_pairs(F.col("ms"), lambda x, y: F.struct(
+        x[member].alias("id_a"), y[member].alias("id_b"),
+        x["ek"].alias("ea"), y["ek"].alias("eb")))
+    first_shared = F.filter(pairs, lambda p: ~F.exists(
+        F.zip_with(p["ea"], p["eb"], lambda a, b: a == b), lambda v: v))
+    return (grouped.select(F.explode(first_shared).alias("p"))
+            .select("p.id_a", "p.id_b"))
+
+
+def _minhash_keys(df: DataFrame, text_col: str, id_col: str,
+                  num_hashes: int, bands: int, k: int
+                  ) -> tuple[DataFrame, str, list[Column]]:
+    """``(keyed frame, member, band keys)`` for banded MinHash — the one
+    oracle-pinned key construction (the DuckDB oracle replays it bit for
+    bit).
+
+    Hash family: one seeded md5 per shingle yields FOUR independent 32-bit
+    hashes (8-hex-char substrings of the 128-bit digest), so signature
+    position i is ``substring(md5('h{i//4}:' || shingle), (i%4)*8+1, 8)``
+    minimized over the shingles; band b's key is ``'b{b}:'`` + md5 of its
+    ``num_hashes/bands`` positions joined by ``|``. Lazy: the signature
+    expression (num_hashes/4 md5 per shingle) runs once per row, with no
+    persist/materialize job."""
     rows = num_hashes // bands
     n_seeds = -(-num_hashes // 4)
     # ONE array traversal computes all digests (n_seeds md5 per shingle,
@@ -469,10 +503,10 @@ def minhash_band_table(df: DataFrame, text_col: str = "text",
     hs_df = (_spread(df.select(F.col(id_col).alias("id"), text_col))
              .select("id", tokens(F.lower(F.col(text_col))).alias("__toks__"))
              .select("id", digests.alias("hs")))
-    # signature position i = 8-hex-char chunk at offset i*8 of the concat
-    # (== substring(md5(h{i//4}:s), (i%4)*8+1, 8) — same family as
-    # minhash_signature and the DuckDB oracle). Band keys are built straight
-    # from the per-position mins so every position is traversed exactly once.
+
+    # signature position i = 8-hex-char chunk at offset i*8 of the concat;
+    # band keys are built straight from the per-position mins so every
+    # position is traversed exactly once
     def sig_i(i: int):
         off = i * 8 + 1
         return F.array_min(F.transform(F.col("hs"),
@@ -482,61 +516,7 @@ def minhash_band_table(df: DataFrame, text_col: str = "text",
                      F.md5(F.concat_ws("|", *[sig_i(b * rows + r)
                                               for r in range(rows)])))
             for b in range(bands)]
-    return hs_df.select("id", F.explode(F.array(*keys)).alias("band"))
-
-
-def _minhash_band_table_canonical(df: DataFrame, text_col: str,
-                                  id_col: str, num_hashes: int,
-                                  bands: int, k: int) -> DataFrame:
-    """``minhash_band_table`` variant for canonical-band pair emission:
-    (id, bi, band, ek) rows where ``bi`` is the band index and ``ek`` the
-    row's EARLIER band keys (slice [0, bi) of the key array). Carrying
-    ~(bands-1)/2 x 35 B of earlier keys per keyed row lets the pair
-    generator suppress re-emissions in-group, removing the pair-stream
-    ``distinct()`` exchange — the stream that goes quadratic on hot
-    bands, far larger than the keyed table whenever dedup pressure is
-    real. Same key construction as ``minhash_band_table`` (the md5
-    signature family is oracle-pinned)."""
-    rows = num_hashes // bands
-    n_seeds = -(-num_hashes // 4)
-    digests = F.transform(
-        shingles_from_tokens(F.col("__toks__"), k),
-        lambda s: F.concat(*[F.md5(F.concat(F.lit(f"h{j}:"), s))
-                             for j in range(n_seeds)]))
-    hs_df = (_spread(df.select(F.col(id_col).alias("id"), text_col))
-             .select("id", tokens(F.lower(F.col(text_col))).alias("__toks__"))
-             .select("id", digests.alias("hs")))
-
-    def sig_i(i: int):
-        off = i * 8 + 1
-        return F.array_min(F.transform(F.col("hs"),
-                                       lambda h: F.substring(h, off, 8)))
-
-    keys = [F.concat(F.lit(f"b{b}:"),
-                     F.md5(F.concat_ws("|", *[sig_i(b * rows + r)
-                                              for r in range(rows)])))
-            for b in range(bands)]
-    # each key becomes a PHYSICAL column first, and the generator explodes
-    # a CONSTANT-size array of (bi, band, ek) structs over those
-    # attributes. Two traps this shape avoids (measured, 70x): a
-    # posexplode over a computed array ATTRIBUTE makes
-    # InferFiltersFromGenerate add ``size(arr) > 0``, which filter
-    # pushdown inlines through every projection down to the scan —
-    # re-evaluating the whole md5 pipeline per input row (a literal-size
-    # array folds the inferred filter away instead); and referencing the
-    # key array after the Generate would duplicate its expression. The
-    # key columns stay a separate Project (CollapseProject never inlines
-    # non-cheap multiply-referenced exprs), so every md5 runs once.
-    kd = hs_df.select("id", *[k.alias(f"__k{b}__")
-                              for b, k in enumerate(keys)])
-    items = F.array(*[
-        F.struct(F.lit(b).alias("bi"),
-                 F.col(f"__k{b}__").alias("band"),
-                 F.array(*[F.col(f"__k{j}__") for j in range(b)])
-                  .alias("ek"))
-        for b in range(bands)])
-    return (kd.select("id", F.explode(items).alias("x"))
-            .select("id", "x.bi", "x.band", "x.ek"))
+    return hs_df, "id", keys
 
 
 def minhash_candidate_recall(s: float, bands: int, rows_per_band: int
@@ -551,17 +531,10 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
                            bands: int = 4, k: int = 3) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) sharing >= 1 LSH band.
 
-    Plan shape at scale: one narrow map computes signatures; explode to
-    (band_key, id); ONE shuffle groups each band's members; ordered pairs
-    are generated in-band from the sorted member array, each pair emitted
-    exactly once from the first band it shares (canonical-band emission —
-    no pair-stream ``distinct()``). No cartesian anywhere. (r14, guide
-    §2.4: the former band self-equi-join shuffled the keyed table twice
-    and needed an eager materialize so the signature expression would not
-    compute once per join side — grouping lands a band's members on one
-    reducer exactly like the join's hash partitioning did, so hot-band
-    concentration is unchanged while one exchange and the materialize job
-    disappear.)
+    Candidates come from :func:`_band_pairs` over the band keys of
+    :func:`_minhash_keys`: one narrow map computes signatures, ONE shuffle
+    groups each band's members, and each pair is emitted once, from the
+    first band it shares.
 
     Candidate recall is a function of the TRUE Jaccard similarity s:
     P(candidate) = 1 - (1 - s^r)^b with r = num_hashes/bands rows per band
@@ -577,34 +550,8 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
           bands=bands, rows_per_band=r,
           recall_at_s={s: round(minhash_candidate_recall(s, bands, r), 4)
                        for s in (0.5, 0.8, 0.95)})
-    keyed = _minhash_band_table_canonical(df, text_col, id_col,
-                                          num_hashes, bands, k)
-    grouped = (keyed.groupBy("bi", "band")
-               .agg(F.array_sort(F.collect_list(F.struct("id", "ek")))
-                     .alias("ms"))
-               .where(F.size("ms") >= 2))
-    arr = F.col("ms")
-    # ordered pairs from the sorted member array: element i pairs with
-    # every later element, so id_a < id_b by construction (identical to
-    # the old a.id < b.id join predicate); each member carries its
-    # earlier band keys for the canonical-band filter below
-    pair_structs = F.flatten(F.transform(
-        arr,
-        lambda x, i: F.transform(
-            F.slice(arr, i + F.lit(2), F.size(arr)),
-            lambda y: F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
-                               x["ek"].alias("ea"), y["ek"].alias("eb")))))
-    # canonical-band emission (r14, guide §2.4): emit a pair only from the
-    # FIRST band both members share — an agreeing earlier key means the
-    # pair already surfaced in that band's group. Replaces the
-    # ``distinct()`` exchange over the pair stream (the stream that goes
-    # quadratic on hot bands) with an in-group elementwise key compare.
-    dup_earlier = F.exists(
-        F.zip_with(F.col("p.ea"), F.col("p.eb"), lambda a, b: a == b),
-        lambda v: v)
-    return (grouped.select(F.explode(pair_structs).alias("p"))
-            .filter(~dup_earlier)
-            .select("p.id_a", "p.id_b"))
+    return _band_pairs(*_minhash_keys(df, text_col, id_col, num_hashes,
+                                      bands, k))
 
 
 # driver/executor broadcast budget for the collected-lookup rescore paths
@@ -747,11 +694,6 @@ def jaccard_near_dup_pairs(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
-
-# legacy row-count alias kept for callers that sized against it; the actual
-# gate in embedding_near_dup_pairs is byte-based (_BCAST_BYTES_MAX)
-_BCAST_VECS_MAX = 2_000_000
-
 
 def _collect_matrix(base: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """(ids_sorted, row-normalized matrix sorted by id) via ``toArrow()``
@@ -1005,9 +947,21 @@ def lsh_plan(threshold: float, target_recall: float = 0.9,
     return best
 
 
+def _lsh_bucket_keys(base: DataFrame, dim: int, n_planes: int,
+                     n_tables: int) -> tuple[DataFrame, str, list[Column]]:
+    """``(keyed frame, member, band keys)`` for hyperplane LSH over
+    ``base(id, vec)``: the bucket UDF runs ONCE per row into one array
+    column, and each table's sign-bit bucket string is a band key."""
+    from arcticdb_spark.extensions.similarity import _bucket_udf, _planes
+    buckets = _bucket_udf([_planes(dim, n_planes, seed=7000 + t)
+                           for t in range(n_tables)])
+    keyed = base.select("id", buckets(F.col("vec")).alias("bk"))
+    return keyed, "id", [F.col("bk")[t] for t in range(n_tables)]
+
+
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                              id_col: str = "vec_id", vec_col: str = "embedding",
-                             exact_below: int = 2000, dim: int = 64,
+                             dim: int = 64,
                              n_planes: int | None = None,
                              n_tables: int | None = None,
                              n_rows: int | None = None,
@@ -1040,20 +994,14 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
       fixed 6x8; the gate log records the estimated boundary recall.
 
     Pass ``n_rows`` (manifest total_rows / parquet footer count) to pick the
-    strategy without a driver-side scan; ``exact_below=0`` forces the LSH
-    path unconditionally (legacy probe knob, same as strategy='lsh'). The
-    ``df.count()`` fallback only runs when the caller provides neither.
+    strategy without a driver-side scan; the ``df.count()`` fallback only
+    runs when the caller provides neither ``n_rows`` nor ``strategy='lsh'``.
     """
-    from arcticdb_spark.extensions.similarity import _bucket_udf, _planes
     if broadcast_bytes_max is None:   # resolve at CALL time (tests/probes
         broadcast_bytes_max = _BCAST_BYTES_MAX   # monkeypatch the global)
-    if strategy is None and exact_below <= 0:
-        strategy = "lsh"
     n = n_rows if n_rows is not None else (0 if strategy == "lsh" else df.count())
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     if strategy is None:
-        # broadcast_bytes_max is a memory BUDGET: it dominates exact_below
-        # (which only keeps its legacy <=0 -> lsh meaning above).
         strategy = ("exact" if n * dim * 8 <= broadcast_bytes_max
                     else "grid")
     if strategy == "exact":
@@ -1077,29 +1025,12 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     _gate("embedding_strategy", "lsh", n_rows=n,
           est_bytes=n * dim * 8, budget=broadcast_bytes_max,
           est_boundary_recall=round(est_recall, 4))
-    buckets = _bucket_udf([_planes(dim, n_planes, seed=7000 + t)
-                           for t in range(n_tables)])
-    # candidate generation shuffles IDS ONLY: the (id, bucket) table is
-    # two scalars per row, so the bucket grouping never carries the
-    # 64-float vectors (the naive form moves dim*8 bytes per candidate).
-    # r14 (guide §2.4): group per bucket and emit ordered pairs from the
-    # sorted member array — the former self-equi-join shuffled the keyed
-    # table twice and needed an eager materialize so the bucket UDF would
-    # not run once per join side; grouping keeps the same per-bucket
-    # reducer concentration with one exchange and no materialize job.
-    keyed = base.select("id", F.explode(buckets(F.col("vec"))).alias("bk"))
-    grouped = (keyed.groupBy("bk")
-               .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-               .where(F.size("ids") >= 2))
-    arr = F.col("ids")
-    pair_structs = F.flatten(F.transform(
-        arr,
-        lambda x, i: F.transform(
-            F.slice(arr, i + F.lit(2), F.size(arr)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    pairs = (grouped.select(F.explode(pair_structs).alias("p"))
-             .select("p.id_a", "p.id_b")
-             .dropDuplicates(["id_a", "id_b"]))
+    # candidate generation shuffles IDS ONLY: the keyed table is an id
+    # plus one bucket string per table, so the bucket grouping never
+    # carries the 64-float vectors (the naive form moves dim*8 bytes per
+    # candidate); a pair colliding in several tables is emitted only from
+    # the first, so no pair-stream dedup is needed
+    pairs = _band_pairs(*_lsh_bucket_keys(base, dim, n_planes, n_tables))
     _gate("embedding_rescore",
           "broadcast" if (n_rows is not None
                           and n_rows * dim * 8 <= broadcast_bytes_max)
@@ -1195,60 +1126,26 @@ def _simhash_vote_udf():
     return vote
 
 
+def _simhash_chunks(bands: int) -> list[Column]:
+    """SimHash band keys: the ``bands`` fixed-width chunks of column
+    ``sh``, lowest bits first."""
+    width = _SIMHASH_BITS // bands
+    mask = (1 << width) - 1
+    return [F.shiftright(F.col("sh"), i * width).bitwiseAND(F.lit(mask))
+            for i in range(bands)]
+
+
 def _simhash_hash_pairs(groups: DataFrame, bands: int,
                         max_hamming: int) -> DataFrame:
     """Verified near-dup pairs over DISTINCT SimHash values (``sh_a < sh_b``
-    + ``hamming``): band each hash into ``bands`` chunks, group per chunk
-    key, emit ordered pairs from the sorted member array, verify with
-    popcount (r14, guide §2.4 — one exchange where the former chunk
-    self-join shuffled the chunk table twice; per-chunk reducer
-    concentration is identical). Shared by the pair and cluster APIs so
-    the banding math cannot diverge between them.
-
-    Canonical-band emission (r14, guide §2.4): a pair whose hashes agree
-    in several chunks used to be emitted once per shared chunk and
-    deduplicated with a ``distinct()`` — a full extra exchange over the
-    PAIR stream, which is exactly the stream that goes quadratic on hot
-    chunks. Both full hashes are present inside the group, so each pair
-    is now emitted only from its FIRST shared chunk (no earlier chunk
-    j < bi agrees — pure integer shift/mask math, zero extra shuffle
-    bytes), which yields each qualifying pair exactly once with no
-    dedup exchange."""
-    width = _SIMHASH_BITS // bands
-    mask = (1 << width) - 1
-
-    def chunk(col: Column, i) -> Column:
-        return F.shiftright(col, i * width).bitwiseAND(F.lit(mask))
-
-    hc = groups.select(
-        "sh",
-        F.posexplode(F.array(*[chunk(F.col("sh"), i)
-                               for i in range(bands)])).alias("bi", "cv"))
-    grouped = (hc.groupBy("bi", "cv")
-               .agg(F.array_sort(F.collect_list("sh")).alias("shs"))
-               .where(F.size("shs") >= 2))
-    arr = F.col("shs")
-    pair_structs = F.flatten(F.transform(
-        arr,
-        lambda x, i: F.transform(
-            F.slice(arr, i + F.lit(2), F.size(arr)),
-            lambda y: F.struct(x.alias("sh_a"), y.alias("sh_b")))))
-    sha, shb = F.col("p.sh_a"), F.col("p.sh_b")
-    # first-shared-chunk filter: band 0 always emits; band b emits only
-    # when no chunk j < b agrees (an agreeing earlier chunk means the
-    # same pair already surfaced in that chunk's group)
-    keep = F.when(F.col("bi") == 0, F.lit(True))
-    earlier = None
-    for b in range(1, bands):
-        m = chunk(sha, b - 1) == chunk(shb, b - 1)
-        earlier = m if earlier is None else (earlier | m)
-        keep = keep.when(F.col("bi") == b, ~earlier)
-    keep = keep.otherwise(F.lit(False))
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (grouped.select("bi", F.explode(pair_structs).alias("p"))
-            .filter(keep)
-            .select("p.sh_a", "p.sh_b")
-            .withColumn("hamming", ham)
+    + ``hamming``): the ``bands`` fixed-width chunks of each hash are its
+    band keys for :func:`_band_pairs`, and candidates are verified with
+    popcount. Shared by the pair and cluster APIs so the banding math
+    cannot diverge between them."""
+    ham = F.bit_count(F.col("id_a").bitwiseXOR(F.col("id_b")))
+    return (_band_pairs(groups, "sh", _simhash_chunks(bands))
+            .select(F.col("id_a").alias("sh_a"), F.col("id_b").alias("sh_b"),
+                    ham.alias("hamming"))
             .filter(F.col("hamming") <= max_hamming))
 
 
@@ -1257,18 +1154,18 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
                            bands: int = 4) -> DataFrame:
     """Near-dups by SimHash: band the hash into ``bands`` chunks — any pair
     within ``bands-1`` differing bits shares >= 1 exact chunk (pigeonhole),
-    so candidates come from equi-joins, verified by popcount.
+    so candidates come from the chunk grouping, verified by popcount.
 
-    The join runs at the DISTINCT-HASH level: documents with identical
+    Banding runs at the DISTINCT-HASH level: documents with identical
     hashes collapse to one node first (template-heavy corpora have far
-    fewer hashes than docs — 3812 vs 5000 in the test corpus), the banded
-    self-join + hamming verify touches hash pairs only, and surviving hash
+    fewer hashes than docs — 3812 vs 5000 in the test corpus), the chunk
+    grouping + hamming verify touches hash pairs only, and surviving hash
     pairs expand back to id pairs via the per-hash id lists. This removes
-    the two scale hazards of the per-doc join: skewed chunk buckets go
+    the two scale hazards of per-doc banding: skewed chunk buckets go
     quadratic in DOCS (one 1582-doc bucket = 1.25M pairs in one task) when
-    they should be quadratic in distinct hashes, and the final
-    ``distinct()`` over the (huge) id-pair stream disappears because the
-    hash-level expansion emits each pair exactly once."""
+    they should be quadratic in distinct hashes, and a final
+    ``distinct()`` over the (huge) id-pair stream is unnecessary because
+    the hash-level expansion emits each pair exactly once."""
     h = simhash(F.col(text_col))
     base = _spread(df.select(F.col(id_col).alias("id"), text_col)) \
         .select("id", h.alias("sh"))
@@ -1292,10 +1189,10 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
     # same-hash pairs (hamming 0): ordered combinations within each group,
     # generated JVM-side with array HOFs — no join, no shuffle
     same = (groups.filter(F.size("ids") > 1)
-            .select(F.explode(F.expr(
-                "flatten(transform(ids, x -> "
-                "transform(filter(ids, y -> y > x), "
-                "y -> struct(x AS id_a, y AS id_b))))")).alias("p"))
+            .select(F.explode(_ordered_pairs(
+                F.array_sort("ids"),
+                lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))))
+                .alias("p"))
             .select(F.col("p.id_a"), F.col("p.id_b"),
                     F.lit(0).cast("int").alias("hamming")))
     return cross.unionByName(same)
@@ -1469,17 +1366,6 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
         F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)),
                     lambda i: F.array_join(F.slice(toks, i, n), " "))
     ).otherwise(F.array().cast("array<string>"))
-
-
-def word_ngrams(text: Column, n: int) -> Column:
-    """Lower-cased word n-grams as space-joined strings; documents shorter
-    than n tokens yield an empty array (no short-doc fallback — matches the
-    Gopher/decontamination recipes, which ignore sub-n docs).
-
-    Prefer projecting ``tokens(F.lower(c))`` to a column and calling
-    :func:`ngrams_from_tokens` in hot paths (see its docstring). Lowering
-    the whole string once beats a per-token transform."""
-    return ngrams_from_tokens(tokens(F.lower(text)), n)
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,

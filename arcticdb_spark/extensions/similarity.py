@@ -9,9 +9,9 @@
   deterministic broadcast literal; bucket = sign-bit string; candidates =
   equi-join on bucket (with multi-probe via several tables), exact-rescored.
   Recall < 1.0 by construction; the bench compares it against brute force.
-* **ivf_assign / ivf_topk** — IVF-style coarse quantization: k centroid
-  vectors (sampled deterministically), assign by best dot product, search
-  only the nprobe closest lists.
+* **centroid_assign / ivf_topk** — IVF-style coarse quantization: k
+  centroid vectors (sampled deterministically), assign by best dot product,
+  search only the nprobe closest lists.
 """
 
 from __future__ import annotations
@@ -93,15 +93,6 @@ def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     import numpy as np
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id as a string of 0/1 (pure-SQL variant)."""
-    bits = []
-    for p in planes:
-        lit = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(F.when(_dot(vec, lit) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
 
 
 def _bucket_udf(planes_list: list[list[list[float]]], probe: int = 0):
@@ -317,12 +308,6 @@ def centroid_assign(corpus: DataFrame, k: int = 8,
                         assign(F.col(vec_col)).alias("a"))
     return out.select("vec_id", F.col("a.centroid_id").alias("centroid_id"),
                       F.col("a.cos").alias("cos"))
-
-
-def _sq_dist(v: Column, lit_vec: list[float]) -> Column:
-    arr = F.array(*[F.lit(float(x)) for x in lit_vec])
-    return F.aggregate(F.zip_with(v, arr, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda acc, d: acc + d)
 
 
 def _kmeans_estep(base: DataFrame, cents: dict) -> DataFrame:

@@ -684,7 +684,7 @@ def test_embedding_byte_gate_routes_to_join(spark, monkeypatch):
     # tiny byte budget: n_rows*dim*8 must exceed it -> join rescore
     monkeypatch.setattr(xdedup, "_BCAST_BYTES_MAX", 1)
     out = xdedup.embedding_near_dup_pairs(df, threshold=0.99, dim=8,
-                                          exact_below=0, n_rows=6).toPandas()
+                                          strategy="lsh", n_rows=6).toPandas()
     got = {(a, b) for a, b in zip(out.id_a, out.id_b)}
     assert (0, 1) in got
 

@@ -67,18 +67,18 @@ def test_embedding_near_dup_exact_vs_lsh(spark):
     df = spark.createDataFrame(
         [(i, [float(x) for x in vecs[i]]) for i in range(55)],
         "vec_id long, embedding array<float>")
-    exact = embedding_near_dup_pairs(df, threshold=0.99, exact_below=100).toPandas()
+    exact = embedding_near_dup_pairs(df, threshold=0.99).toPandas()
     planted = {(i, 50 + i) for i in range(5)}
     got = {(a, b) for a, b in zip(exact.id_a, exact.id_b)}
     assert planted <= got
-    # LSH path (forced: exact_below=0) finds the planted dups too — at
+    # LSH path (forced: strategy="lsh") finds the planted dups too — at
     # threshold 0.99 the boundary recall estimate is high, unlike low
     # thresholds where the byte-gated exact path is mandatory
     from arcticdb_spark.extensions.dedup import (GATE_LOG, clear_gate_log,
                                                  lsh_candidate_recall)
     assert lsh_candidate_recall(0.99, 4, 8) > 0.95
     clear_gate_log()
-    lsh = embedding_near_dup_pairs(df, threshold=0.99, exact_below=0,
+    lsh = embedding_near_dup_pairs(df, threshold=0.99, strategy="lsh",
                                    dim=16, n_planes=4, n_tables=8).toPandas()
     assert [g for g in GATE_LOG
             if g["gate"] == "embedding_strategy"][0]["path"] == "lsh"

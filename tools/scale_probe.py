@@ -132,7 +132,7 @@ def probe_sf1_gates(spark) -> list[str]:
         gates = "; ".join(
             f"{g['gate']}->{g['path']} "
             + (f"({g.get('est_bytes', g.get('edges', g.get('n_rows', '?')))}"
-               f"/{g.get('budget', g.get('exact_below', '?'))})")
+               f"/{g.get('budget', '?')})")
             for g in xd.GATE_LOG) or "-"
         lines.append(f"| {name} | {dt:.1f} | {gates} |")
         xd.unpersist_all()
@@ -197,7 +197,7 @@ def probe_forced_join_gates(spark) -> list[str]:
          lambda: xd.jaccard_near_dup_pairs(dup, broadcast_bytes_max=1).count()),
         ("embedding_rescore", "broadcast (LSH opt-in)",
          lambda: xd.embedding_near_dup_pairs(
-             emb10, n_rows=n_vecs, exact_below=0,
+             emb10, n_rows=n_vecs, strategy="lsh",
              n_planes=6, n_tables=8).count()),
         ("embedding_exact", "blocked GEMM (default under budget)",
          lambda: xd.embedding_near_dup_pairs(emb10, n_rows=n_vecs).count()),
@@ -206,7 +206,7 @@ def probe_forced_join_gates(spark) -> list[str]:
              emb10, n_rows=n_vecs, broadcast_bytes_max=1).count()),
         ("embedding_rescore", "join (forced, LSH opt-in)",
          lambda: xd.embedding_near_dup_pairs(
-             emb10, n_rows=n_vecs, exact_below=0, n_planes=6, n_tables=8,
+             emb10, n_rows=n_vecs, strategy="lsh", n_planes=6, n_tables=8,
              broadcast_bytes_max=1).count()),
     ]
     for op, path, fn in runs:

@@ -120,7 +120,7 @@ def flip_checks(spark) -> dict:
 
     # 2) embedding strategy + rescore flips. The DEFAULT at sf1 is the
     # exact blocked-GEMM path (byte gate: 10 MB matrix); its output is
-    # the oracle truth. The LSH scale path is then forced (exact_below=0)
+    # the oracle truth. The LSH scale path is then forced (strategy='lsh')
     # under both rescore budgets: the two LSH variants must be
     # value-identical to each other, and their measured candidate recall
     # against the exact truth is recorded (it is EXPECTED to be low at
@@ -152,13 +152,13 @@ def flip_checks(spark) -> dict:
     print(f"embedding grid(forced above-budget, k={g_grid[0]['grid_k']}): "
           f"{len(grid)} pairs — hash-identical to the broadcast-exact "
           "truth", flush=True)
-    # LSH is opt-in since r13 (strategy='lsh' / legacy exact_below=0);
+    # LSH is opt-in since r13 (strategy='lsh');
     # planes/tables pinned at the historical 6x8 so the recorded recall
     # stays comparable across rounds
     _cleanup(spark)
     xdedup.clear_gate_log()
     a = _rows(xdedup.embedding_near_dup_pairs(emb, threshold=0.45,
-                                              n_rows=n_rows, exact_below=0,
+                                              n_rows=n_rows, strategy="lsh",
                                               n_planes=6, n_tables=8),
               [("id_a", 0), ("id_b", 0), ("cos", 1)])
     g_lsh = [g for g in xdedup.GATE_LOG if g["gate"] == "embedding_rescore"]
@@ -166,7 +166,7 @@ def flip_checks(spark) -> dict:
     _cleanup(spark)
     xdedup.clear_gate_log()
     b = _rows(xdedup.embedding_near_dup_pairs(emb, threshold=0.45,
-                                              n_rows=n_rows, exact_below=0,
+                                              n_rows=n_rows, strategy="lsh",
                                               n_planes=6, n_tables=8,
                                               broadcast_bytes_max=1),
               [("id_a", 0), ("id_b", 0), ("cos", 1)])
